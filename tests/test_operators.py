@@ -527,6 +527,17 @@ def test_connected_components_seed_round_fold(spark):
     assert full == {7: 7, 8: 7, 9: 7, 10: 7}
 
 
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_refuses_no_rounds(spark, max_iter):
+    """The seed round always runs, so a bound below one round is
+    refused instead of silently running one."""
+    from wrds2pg_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(edges, max_iter=max_iter)
+
+
 def test_lineage_cut_reliable_checkpoint_switch(spark, tmp_path):
     """Round-11 session switch (r10 verdict item 8): lineage_cut is
     localCheckpoint by default, but when the context has a RELIABLE

@@ -983,3 +983,84 @@ def test_curation_funnel_no_body_shuffle_and_broadcast_join(spark):
     for seg in plan.split("Exchange")[1:]:
         head = seg.split("+-", 1)[0]
         assert "text#" not in head, head
+
+
+# --- ingest option chain -------------------------------------------------
+#
+# Semantics of plans.ingest.apply_options, one row per rule: (input
+# columns, input rows, options, expected (name, type) list, expected
+# rows).  Input rows are in one partition, so obs takes the first rows.
+
+_S, _D = "string", "double"
+_APPLY_OPTIONS_CASES = {
+    "fix_missing_nulls_special_letters_in_numeric_targets": (
+        [("x", _S), ("s", _S)],
+        [("A", "A"), ("Z", "Z"), ("_", "_"), (".", "."), ("", ""),
+         ("  B ", "  B "), ("1.5", "1.5"), (None, None)],
+        dict(fix_missing=True, col_types={"x": "float8", "s": "text"}),
+        [("x", "double"), ("s", "string")],
+        [(None, "A"), (None, "Z"), (None, "_"), (None, "."), (None, ""),
+         (None, "  B "), (1.5, "1.5"), (None, None)],
+    ),
+    "boolean_override_of_a_0_1_double": (
+        [("flag", _D)],
+        [(0.0,), (1.0,), (None,)],
+        dict(col_types={"flag": "boolean"}),
+        [("flag", "boolean")],
+        [(False,), (True,), (None,)],
+    ),
+    "obs_applies_before_where": (
+        [("id", "bigint")],
+        [(i,) for i in range(1, 11)],
+        dict(obs=5, where="id gt 3"),
+        [("id", "bigint")],
+        [(4,), (5,)],
+    ),
+    "where_sees_renamed_names_and_names_are_lowered": (
+        [("A", "bigint"), ("Other", _S)],
+        [(1, "x"), (2, "y")],
+        dict(rename="a=b", where="b eq 2"),
+        [("b", "bigint"), ("other", "string")],
+        [(2, "y")],
+    ),
+    "drop_prefix_wildcard": (
+        [("p_a", _S), ("p_b", _S), ("q", _S), ("r", _S)],
+        [("1", "2", "3", "4")],
+        dict(drop="p_: nosuch"),
+        [("q", "string"), ("r", "string")],
+        [("3", "4")],
+    ),
+    "keep_prefix_wildcard_orders_by_spec": (
+        [("p_a", _S), ("q", _S), ("p_b", _S), ("r", _S)],
+        [("1", "2", "3", "4")],
+        dict(keep="r p_:"),
+        [("r", "string"), ("p_a", "string"), ("p_b", "string")],
+        [("4", "1", "3")],
+    ),
+    "col_types_keys_case_insensitive_unknown_ignored": (
+        [("x", _S), ("y", _S)],
+        [("7", "8")],
+        dict(col_types={"X": "integer", "nosuch": "bigint"}),
+        [("x", "int"), ("y", "string")],
+        [(7, "8")],
+    ),
+    "fix_cr_implies_fix_missing": (
+        [("x", _S), ("t", _S)],
+        [("A", "a\rb\nc"), ("2", "d")],
+        dict(fix_cr=True, col_types={"x": "integer"}),
+        [("x", "int"), ("t", "string")],
+        [(None, "a b c"), (2, "d")],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_APPLY_OPTIONS_CASES))
+def test_apply_options_semantics(spark, case):
+    from wrds2pg_spark.plans.ingest import IngestOptions, apply_options
+
+    cols, rows, opts, want_types, want_rows = _APPLY_OPTIONS_CASES[case]
+    schema = ", ".join(f"`{n}` {t}" for n, t in cols)
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    out = apply_options(df, IngestOptions(**opts))
+    assert out.dtypes == want_types
+    assert [tuple(r) for r in out.collect()] == want_rows

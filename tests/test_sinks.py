@@ -419,6 +419,43 @@ def test_wrds_update_self_resolves_sink_stamp(spark, tmp_path):
     assert any("CREATE TABLE" in s for s in called)
 
 
+def test_wrds_update_copy_forced_skips_stamp_and_batches_ddl(spark, tmp_path):
+    """A forced COPY load reads no stamp (the gate ignores it), sends
+    its DDL as one string, and stamps the table after the last COPY.
+    An unforced load still reads the stamp first."""
+    from wrds2pg_spark.update import wrds_update
+
+    src = tmp_path / "src.parquet"
+    spark.range(3).write.parquet(str(src))
+    calls = []
+
+    def execute_query(sql):
+        calls.append(("query", sql))
+        return []
+
+    def load(force):
+        calls.clear()
+        assert wrds_update(
+            spark, str(src), "t", "s", "", force=force, transport="copy",
+            execute_sql=lambda sql: calls.append(("sql", sql)),
+            execute_query=execute_query,
+            copy_csv=lambda schema, table, path, header=False:
+                calls.append(("copy", table)),
+        ) is True
+        return [kind for kind, _ in calls]
+
+    kinds = load(force=True)
+    assert kinds[0] == "sql" and kinds[-1] == "sql"
+    assert set(kinds[1:-1]) == {"copy"}
+    ddl = calls[0][1]
+    heads = [ddl.find(s) for s in
+             ("CREATE SCHEMA", "DROP TABLE", "CREATE TABLE")]
+    assert -1 not in heads and heads == sorted(heads)
+    assert calls[-1][1].startswith("COMMENT ON TABLE")
+
+    assert load(force=False)[0] == "query"
+
+
 # --- sas_encoding kwarg parity --------------------------------------------
 
 def test_sas_encoding_alias(spark, tmp_path, recwarn):

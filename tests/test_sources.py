@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime
+import gzip
 
 import pytest
 
@@ -70,6 +71,73 @@ def test_read_csv_sas_meta_inference(spark, csv_file):
         "int", "double", "date", "string"
     ]
     assert df.count() == 3
+
+
+# --- CSV sources through read_source -----------------------------------
+#
+# read_source names CSV columns from the header line itself; the names
+# and the rows must match Spark's own header inference.
+
+_HEADER_CASES = {
+    "wlatin1": ("Société,Müller,x\n1,Zoë,3\n".encode("windows-1252"),
+                "wlatin1"),
+    "case_insensitive_duplicates": (b"ID,id,Name,x,NAME\n1,2,3,4,5\n", None),
+    "empty_field": (b"a,,c,\n1,2,3,4\n", None),
+    "quoted_comma": (b'id,"last, first","say \\"hi\\""\n1,2,3\n', None),
+    "leading_blank_lines": (b"\n   \n\r\nid,v\n1,2\n", None),
+    "bom_crlf": (b"\xef\xbb\xbfid,v\r\n1,2\r\n", None),
+}
+
+
+@pytest.mark.parametrize("gz", [False, True], ids=["csv", "csv.gz"])
+@pytest.mark.parametrize("case", sorted(_HEADER_CASES))
+def test_read_source_csv_header_matches_spark(spark, tmp_path, case, gz):
+    from wrds2pg_spark.update import read_source
+
+    data, encoding = _HEADER_CASES[case]
+    path = str(tmp_path / ("h.csv.gz" if gz else "h.csv"))
+    with open(path, "wb") as f:
+        f.write(gzip.compress(data) if gz else data)
+    got = read_source(spark, path, encoding)
+    reader = spark.read.option("header", "true")
+    if encoding:
+        reader = reader.option("encoding", "windows-1252")
+    want = reader.csv(path)
+    assert got.columns == want.columns
+    assert got.collect() == want.collect()
+
+
+@pytest.mark.parametrize("kind", ["csv", "csv.gz", "sas7bdat"])
+def test_forced_wrds_update_pq_runs_one_spark_job(spark, tmp_path, kind):
+    """A forced load plans its source read and ingest options without
+    running Spark: the parquet write is the call's only job."""
+    import pandas as pd
+
+    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat
+    from wrds2pg_spark.update import wrds_update_pq
+
+    frame = pd.DataFrame({"ID": [1.0, 2.0, 3.0], "NAME": ["a", "b", "A"]})
+    src = str(tmp_path / f"t.{kind}")
+    if kind == "sas7bdat":
+        write_sas7bdat(frame, src)
+    else:
+        text = frame.to_csv(index=False).encode()
+        with open(src, "wb") as f:
+            f.write(gzip.compress(text) if kind == "csv.gz" else text)
+    sc = spark.sparkContext
+    group = f"forced-load-{kind}"
+    sc.setJobGroup(group, "forced wrds_update_pq")
+    try:
+        assert wrds_update_pq(
+            spark, src, "t", "s", data_dir=str(tmp_path / "lake"),
+            force=True, where="name ne 'b'", fix_missing=True,
+            col_types={"id": "float8"},
+        ) is True
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_read_sas7bdat_missing_file(spark, tmp_path):

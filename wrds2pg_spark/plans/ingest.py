@@ -28,10 +28,10 @@ into the SAS source (SURVEY §4).
 
 from __future__ import annotations
 
+import string
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from wrds2pg_spark.plans.options import (
     expand_col_spec,
@@ -40,12 +40,17 @@ from wrds2pg_spark.plans.options import (
 )
 from wrds2pg_spark.plans.types import spark_type_for_pg
 
-__all__ = ["IngestOptions", "apply_options", "SAS_SPECIAL_MISSING"]
+__all__ = [
+    "IngestOptions", "apply_options", "quote_name",
+    "special_missing_to_null",
+]
 
-# SAS special missing values as they appear in exported CSV text:
-# a lone letter A-Z or underscore (codegen.py:117-124 collapses them
-# server-side when fix_missing=True; we normalize engine-side).
-SAS_SPECIAL_MISSING = [*"ABCDEFGHIJKLMNOPQRSTUVWXYZ", "_", "."]
+# SAS special missing values as they appear in exported CSV text: a
+# lone letter A-Z, underscore or dot, or nothing at all
+# (codegen.py:117-124 collapses them server-side when fix_missing=True;
+# we normalize engine-side).
+_SPECIAL_MISSING_SQL = ", ".join(
+    f"'{v}'" for v in ["", *string.ascii_uppercase, "_", "."])
 
 
 @dataclass
@@ -63,83 +68,92 @@ class IngestOptions:
     col_types: dict[str, str] = field(default_factory=dict)
 
 
-def _lower_columns(df: DataFrame) -> DataFrame:
-    lowered = [c.lower() for c in df.columns]
-    if lowered == list(df.columns):
-        return df
-    return df.toDF(*lowered)
+def quote_name(name: str) -> str:
+    """``name`` as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _clean_numeric_string(col: Column) -> Column:
-    """String column holding SAS numeric CSV output -> null out special
-    missing letters so a later cast is clean."""
-    trimmed = F.trim(col)
-    return F.when(
-        trimmed.isin(SAS_SPECIAL_MISSING) | (trimmed == ""), F.lit(None)
-    ).otherwise(col)
+def special_missing_to_null(ref: str) -> str:
+    """SQL for the string expression ``ref`` with SAS special missing
+    text (after trimming spaces) turned to NULL, so a later numeric
+    cast is clean."""
+    return (f"CASE WHEN trim({ref}) IN ({_SPECIAL_MISSING_SQL}) "
+            f"THEN NULL ELSE {ref} END")
+
+
+def _alias(sql: str, name: str) -> str:
+    quoted = quote_name(name)
+    return sql if sql == quoted else f"{sql} AS {quoted}"
+
+
+def _value_sql(ref, dtype, target, fix_cr: bool, fix_missing: bool) -> str:
+    """SQL for one output column: CR/LF strip, special-missing scrub
+    and ``col_types`` cast of the input expression ``ref``."""
+    is_string = dtype is not None and dtype.typeName() == "string"
+    if fix_cr and is_string:
+        # strip CR/LF inside character fields (codegen.py:18-28)
+        ref = f"regexp_replace({ref}, '[\\r\\n]', ' ')"
+    if target is None or target == dtype:
+        return ref
+    if fix_missing and is_string and target.typeName() != "string":
+        # typed sources already carry special missings as null; only
+        # string columns destined for a numeric cast need scrubbing
+        ref = special_missing_to_null(ref)
+    if target.typeName() == "boolean" and not is_string:
+        # reference overrides 0/1 numerics to boolean
+        # (wrds_update_test.ipynb cell 1)
+        ref = f"CAST({ref} AS int)"
+    return f"CAST({ref} AS {target.simpleString()})"
 
 
 def apply_options(df: DataFrame, opts: IngestOptions) -> DataFrame:
-    """Apply the full SAS-option chain to a DataFrame (any source)."""
-    df = _lower_columns(df)
+    """Apply the full SAS-option chain to a DataFrame (any source).
+
+    The schema is read once and the chain is planned here, so the
+    plan costs a fixed handful of calls into Spark whatever the column
+    count: at most a limit, one projection for keep/drop/rename, the
+    filter, and one projection for the per-column work (with no
+    ``where``, the two projections are one)."""
+    schema = df.schema
+    fields = [(f.name.lower(), f.dataType) for f in schema.fields]
+    names = [n for n, _ in fields]
+    if names != schema.names:
+        df = df.toDF(*names)
 
     if opts.obs is not None:
         df = df.limit(int(opts.obs))
 
     if opts.drop:
-        to_drop = [c for c in expand_col_spec(opts.drop, df.columns)
-                   if c in df.columns]
-        if to_drop:
-            df = df.drop(*to_drop)
+        to_drop = set(expand_col_spec(opts.drop, names))
+        fields = [f for f in fields if f[0] not in to_drop]
     if opts.keep:
-        df = df.select(*expand_col_spec(opts.keep, df.columns))
-
+        types = dict(fields)
+        fields = [(n, types.get(n)) for n in
+                  expand_col_spec(opts.keep, [n for n, _ in fields])]
+    # pairs apply together, as in a SAS rename= list
     renames = parse_rename(opts.rename)
-    if renames:
-        df = df.withColumnsRenamed(renames)
+    out = [(renames.get(n, n), n, t) for n, t in fields]
 
+    # fix_cr implies fix_missing in the reference (codegen.py:19)
+    fix_missing = opts.fix_missing or opts.fix_cr
+    targets = {k.lower(): spark_type_for_pg(v)
+               for k, v in opts.col_types.items()}
+
+    reshaped = [name for name, _, _ in out] != names
     where_sql = translate_where(opts.where)
     if where_sql:
+        if reshaped:
+            df = df.selectExpr(*(_alias(quote_name(src), name)
+                                 for name, src, _ in out))
         df = df.filter(where_sql)
-
-    if opts.fix_cr:
-        # strip CR/LF inside character fields (codegen.py:18-28);
-        # fix_cr implies fix_missing in the reference (codegen.py:19)
-        opts = IngestOptions(**{**opts.__dict__, "fix_missing": True})
-        for f_ in df.schema.fields:
-            if f_.dataType.typeName() == "string":
-                df = df.withColumn(
-                    f_.name,
-                    F.regexp_replace(F.col(f_.name), "[\\r\\n]", " "),
-                )
-
-    if opts.fix_missing:
-        # For typed sources special missings are already null; only
-        # string columns destined for a numeric cast need scrubbing.
-        numeric_targets = {
-            k.lower()
-            for k, v in opts.col_types.items()
-            if spark_type_for_pg(v).typeName() != "string"
-        }
-        for f_ in df.schema.fields:
-            if f_.dataType.typeName() == "string" and f_.name in numeric_targets:
-                df = df.withColumn(f_.name, _clean_numeric_string(F.col(f_.name)))
-
-    for name, pg_type in opts.col_types.items():
-        name = name.lower()
-        if name not in df.columns:
-            continue
-        target = spark_type_for_pg(pg_type)
-        src_type = df.schema[name].dataType
-        if src_type == target:
-            continue
-        col = F.col(name)
-        if target.typeName() == "boolean" and src_type.typeName() != "string":
-            # reference overrides 0/1 numerics to boolean
-            # (wrds_update_test.ipynb cell 1)
-            col = col.cast("int").cast("boolean")
-        else:
-            col = col.cast(target)
-        df = df.withColumn(name, col)
-
+        out = [(name, name, dtype) for name, _, dtype in out]
+        reshaped = False
+    exprs = [
+        _alias(_value_sql(quote_name(src), dtype, targets.get(name),
+                          opts.fix_cr, fix_missing), name)
+        for name, src, dtype in out
+    ]
+    if reshaped or any(e != quote_name(name)
+                       for e, (name, _, _) in zip(exprs, out)):
+        df = df.selectExpr(*exprs)
     return df

@@ -205,11 +205,11 @@ def update_postgres(
     target = f"{table_name}__staging" if stage_and_rename else table_name
 
     if execute_sql is not None:
-        for stmt in ddl_script(
+        # one round trip (one implicit transaction on psql_runners)
+        execute_sql("; ".join(ddl_script(
             schema, target, names, types,
             create_roles=create_roles and not stage_and_rename,
-        ):
-            execute_sql(stmt)
+        )))
 
     writer = (
         df.write.mode("append")  # table pre-created by ddl_script with exact types
@@ -369,11 +369,11 @@ def update_postgres_copy(
     names = [f.name.lower() for f in df.schema.fields]
     target = f"{table_name}__staging" if stage_and_rename else table_name
 
-    for stmt in ddl_script(
+    # one round trip (one implicit transaction on psql_runners)
+    execute_sql("; ".join(ddl_script(
         schema, target, names, types,
         create_roles=create_roles and not stage_and_rename,
-    ):
-        execute_sql(stmt)
+    )))
 
     out_dir = csv_dir or tempfile.mkdtemp(prefix="wrds2pg_spark_pg_copy_")
     (

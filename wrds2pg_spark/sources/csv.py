@@ -23,14 +23,20 @@ Null semantics carried over:
 
 from __future__ import annotations
 
+import gzip
+import re
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wrds2pg_spark.plans.ingest import SAS_SPECIAL_MISSING
+from wrds2pg_spark.plans.ingest import quote_name, special_missing_to_null
 from wrds2pg_spark.plans.types import spark_type_for_pg, struct_type_for
 
-__all__ = ["read_csv_typed", "read_csv_sas_meta", "normalize_encoding"]
+__all__ = [
+    "read_csv_typed", "read_csv_sas_meta", "read_csv_strings",
+    "normalize_encoding",
+]
 
 # SAS encoding names -> java.nio charset names (the vocabulary Spark's
 # csv reader understands). Identity for names both worlds share.
@@ -107,15 +113,123 @@ def read_csv_typed(
         _enable_full_charsets(spark, charset)
         reader = reader.option("encoding", charset)
     df = reader.csv(path)
+    if not post_casts:
+        return df
+    return df.selectExpr(*(
+        f"CAST({special_missing_to_null(quote_name(f.name))} AS "
+        f"{post_casts[f.name].simpleString()}) AS {quote_name(f.name)}"
+        if f.name in post_casts else quote_name(f.name)
+        for f in fields
+    ))
 
-    for name, dt in post_casts.items():
-        cleaned = F.when(
-            F.trim(F.col(name)).isin(SAS_SPECIAL_MISSING)
-            | (F.trim(F.col(name)) == ""),
-            F.lit(None),
-        ).otherwise(F.col(name))
-        df = df.withColumn(name, cleaned.cast(dt))
-    return df
+
+def _first_line(path: str, charset: str) -> str | None:
+    r"""The first line of a (gzip) text file that is not empty or all
+    spaces, as Spark's CSV header inference finds it: lines split at
+    ``\n``, ``\r`` or ``\r\n`` with a leading UTF-8 BOM dropped, as
+    Hadoop's LineRecordReader splits them, and decoded one by one."""
+    opener = gzip.open if path.lower().endswith(".gz") else open
+    with opener(path, "rb") as f:
+        first = True
+        for raw in f:
+            if first:
+                raw = raw.removeprefix(b"\xef\xbb\xbf")
+                first = False
+            for seg in re.split(rb"[\r\n]", raw):
+                line = seg.decode(charset, errors="replace")
+                if line.strip(" "):
+                    return line
+    return None
+
+
+def _split_header(line: str) -> list[str]:
+    r"""Split one header line into fields as Spark's CSV parser does
+    with its defaults: ``,`` delimiter, ``"`` quote, ``\`` escaping a
+    quote or itself inside quotes, no whitespace trimming.  A quoted
+    field ends at a quote followed, after any whitespace, by a
+    delimiter or the line end; a quote followed by anything else makes
+    the field verbatim text up to the next delimiter.  Checked against
+    Spark 4.1 on random lines of quotes, backslashes, delimiters and
+    whitespace: the names differ only where a stray quote inside a
+    quoted field is followed by a backslash."""
+    fields, i, n = [], 0, len(line)
+    while True:
+        if i < n and line[i] == '"':
+            value, j, end = [], i + 1, n
+            while j < n:
+                c = line[j]
+                if c == "\\" and j + 1 == n:
+                    break  # an escape ending an unclosed field is dropped
+                if c == "\\" and line[j + 1] in '"\\':
+                    value.append(line[j + 1])
+                    j += 2
+                elif c == '"':
+                    k = j
+                    while k < n and line[k] == '"':
+                        k += 1
+                    end = k
+                    while end < n and line[end] <= " ":
+                        end += 1
+                    if end < n and line[end] != ",":
+                        end = line.find(",", k)
+                        end = n if end < 0 else end
+                        value = [line[i:end]]
+                    else:
+                        # a run of quotes closing the field keeps all
+                        # but the last
+                        value.append('"' * (k - j - 1))
+                    break
+                else:
+                    value.append(c)
+                    j += 1
+            # a quote ending the line is a name of its own
+            fields.append('"' if i + 1 == n else "".join(value))
+        else:
+            end = line.find(",", i)
+            end = n if end < 0 else end
+            fields.append(line[i:end])
+        if end >= n:
+            return fields
+        i = end + 1
+
+
+def _header_names(
+    path: str, charset: str = "UTF-8", case_sensitive: bool = False
+) -> list[str]:
+    """The column names ``spark.read.option("header", "true").csv``
+    gives a CSV file, read from its first non-blank line with no Spark
+    job.  Names follow Spark's ``CSVUtils.makeSafeHeader``: an empty
+    field becomes ``_c{i}``, and a name that repeats (ignoring case
+    unless ``case_sensitive``) gets its index appended."""
+    line = _first_line(path, charset)
+    if line is None:
+        return []
+    row = _split_header(line)
+    key = (lambda v: v) if case_sensitive else str.lower
+    seen = Counter(key(v) for v in row)
+    return [
+        f"_c{i}" if not v else f"{v}{i}" if seen[key(v)] > 1 else v
+        for i, v in enumerate(row)
+    ]
+
+
+def read_csv_strings(
+    spark: SparkSession, path: str, encoding: str | None = None
+) -> DataFrame:
+    """Read a CSV file with a header line as all-string columns, named
+    as Spark's header inference would name them.  The header is read
+    here, so planning the read runs no Spark job."""
+    reader = spark.read.option("header", "true")
+    charset = "UTF-8"
+    if encoding:
+        charset = normalize_encoding(encoding)
+        _enable_full_charsets(spark, charset)
+        reader = reader.option("encoding", charset)
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    names = _header_names(path, charset, case_sensitive)
+    schema = T.StructType(
+        [T.StructField(n, T.StringType(), True) for n in names])
+    return reader.schema(schema).csv(path)
 
 
 def read_csv_sas_meta(

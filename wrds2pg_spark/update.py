@@ -8,6 +8,16 @@ reference makes three SAS round-trips per update (stamp, data,
 metadata), Spark needs a single job: schema comes with the read,
 transforms ride the same plan, and the sink gates itself.
 
+Per-call budget of a forced load, pinned by tests:
+- one Spark job, the sink's write.  Nothing runs before the gate: a
+  CSV header is read from the file here, a sas7bdat schema from a
+  driver-side sample, and the ingest options plan in a fixed handful
+  of calls whatever the column count;
+- no stamp read when forced (``wrds_update`` skips the table comment
+  query, which the gate would ignore);
+- the PostgreSQL DDL in one round trip, the comment stamp after the
+  rows are in.
+
 Sources are local files (parquet / csv / sas7bdat via
 sources.*); there is no SAS server in this world, so the
 ``wrds_id``/SSH transport surface is intentionally absent.
@@ -143,16 +153,9 @@ def read_source(
 
         return read_sas7bdat(spark, source_path, read_fn=read_fn)
     if p.endswith((".csv", ".csv.gz")):
-        reader = spark.read.option("header", "true")
-        if encoding:
-            from wrds2pg_spark.sources.csv import (
-                _enable_full_charsets, normalize_encoding,
-            )
+        from wrds2pg_spark.sources.csv import read_csv_strings
 
-            charset = normalize_encoding(encoding)
-            _enable_full_charsets(spark, charset)
-            reader = reader.option("encoding", charset)
-        return reader.csv(source_path)
+        return read_csv_strings(spark, source_path, encoding)
     raise ValueError(f"Unsupported source: {source_path}")
 
 
@@ -282,7 +285,7 @@ def wrds_update(
     source_path = resolve_source(
         source_path, table_name, schema, sas_schema, source_dir
     )
-    if not sink_modified and execute_query is not None:
+    if not (force or sink_modified) and execute_query is not None:
         sink_modified = get_table_comment(
             schema, alt_table_name or table_name, execute_query
         )
